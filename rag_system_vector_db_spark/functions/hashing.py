@@ -48,13 +48,5 @@ def dd_seeded(expr: str, seed: int | str | None = None) -> str:
     return f"('{seed}:' || {expr})" if seed is not None else expr
 
 
-def dd_md5_hex(expr: str, seed: int | str | None = None) -> str:
-    return f"md5({dd_seeded(expr, seed)})"
-
-
 def dd_md5_long(expr: str, seed: int | str | None = None, width: int = HEX_WIDTH) -> str:
     return f"('0x' || substr(md5({dd_seeded(expr, seed)}), 1, {width}))::BIGINT"
-
-
-def dd_md5_int32(expr: str, seed: int | str | None = None) -> str:
-    return dd_md5_long(expr, seed, width=8)

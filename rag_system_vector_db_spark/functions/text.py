@@ -61,23 +61,3 @@ def stopword_count(col: Column, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Co
     sw = F.array(*[F.lit(w) for w in stopwords])
     return F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
 
-
-# --- DuckDB oracle snippets (same semantics) ---
-
-
-def dd_tokens(expr: str) -> str:
-    return f"string_split({expr}, ' ')"
-
-
-def dd_word_shingles(expr: str, n: int = 3) -> str:
-    toks = dd_tokens(expr)
-    return (
-        f"(CASE WHEN len({toks}) < {n} THEN []::VARCHAR[] ELSE "
-        f"[array_to_string(({toks})[i + 1 : i + {n}], ' ') "
-        f"FOR i IN range(len({toks}) - {n} + 1)] END)"
-    )
-
-
-def dd_stopword_count(expr: str, stopwords: tuple[str, ...] = EN_STOPWORDS) -> str:
-    sw = ", ".join(f"'{w}'" for w in stopwords)
-    return f"len(list_filter({dd_tokens(expr)}, t -> list_contains([{sw}], t)))"

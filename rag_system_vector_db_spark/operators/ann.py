@@ -17,9 +17,13 @@ centroid table is broadcast everywhere.
 
 from __future__ import annotations
 
+import json
+import os
+
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions import vector as V
 from ..sources.tables import duck_parquet_path as _duck_path
@@ -31,22 +35,15 @@ def hyperplanes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
     return [[float(x) for x in rng.standard_normal(dim)] for _ in range(n_planes)]
 
 
-def _mat_lit(vecs: list[list[float]]):
-    """A list-of-vectors as ONE nested array literal. Building the same
-    thing as F.array(F.lit(x) per element, per vector) costs one py4j
-    round-trip per scalar — 512 calls for 8x64 centroids, several
-    seconds of pure plan-construction latency per query build. One
-    nested F.lit is one call."""
-    return F.lit([[float(x) for x in v] for v in vecs])
-
-
 def lsh_bucket(vec_col, planes: list[list[float]]):
     """Bucket id = bit b set iff dot(v, plane_b) > 0. The planes enter
     as one nested literal and each dot appears exactly once
     (transform), keeping both plan-build time and the interpreted-HOF
     tree size linear in n_planes."""
-    dots = F.transform(_mat_lit(planes), lambda p: V.dot(vec_col, p))
-    weights = F.lit([1 << b for b in range(len(planes))]).cast("array<long>")
+    dots = F.transform(V.array_lit(planes), lambda p: V.dot(vec_col, p))
+    weights = V.array_lit([1 << b for b in range(len(planes))], integral=True).cast(
+        "array<long>"
+    )
     return F.aggregate(
         F.zip_with(
             dots, weights, lambda d, w: F.when(d > 0, w).otherwise(F.lit(0).cast("long"))
@@ -447,7 +444,7 @@ def _centroid_dists(vec_col, centroids: list[list[float]]):
     subexpression elimination, so that formulation re-ran the 64-dim
     euclideans hundreds of times per row — measured 15x slower at
     sf0.1.)"""
-    return F.transform(_mat_lit(centroids), lambda c: V.euclidean(vec_col, c))
+    return F.transform(V.array_lit(centroids), lambda c: V.euclidean(vec_col, c))
 
 
 def _argmin(darr):
@@ -462,7 +459,7 @@ def _probe_structs(query_vec_col, centroids: list[list[float]]):
     """(cell, distance) structs for probe-order sorting — nested
     literal + index-transform, one euclidean subtree per centroid."""
     return F.transform(
-        _mat_lit(centroids),
+        V.array_lit(centroids),
         lambda c, i: F.struct(
             i.alias("cell"), V.euclidean(query_vec_col, c).alias("d")
         ),
@@ -780,11 +777,6 @@ def _euclid2(a, b):
     return F.aggregate(d, F.lit(0.0), lambda acc, v: acc + v * v)
 
 
-def _books_lit(codebooks: list[list[list[float]]]):
-    """codebooks[m][k][dsub] as ONE nested literal (see _mat_lit)."""
-    return F.lit([[[float(x) for x in c] for c in book] for book in codebooks])
-
-
 def _subvectors(vec_col, m: int, dsub: int):
     """The m subspace slices of a vector, as an array of arrays."""
     v = vec_col.cast("array<double>")
@@ -809,7 +801,7 @@ def pq_code_expr(vec_col, codebooks: list[list[list[float]]]):
     m = len(codebooks)
     dsub = len(codebooks[0][0])
     dists = F.zip_with(
-        _books_lit(codebooks),
+        V.array_lit(codebooks),
         _subvectors(vec_col, m, dsub),
         lambda book, sv: F.transform(book, lambda c: _euclid2(sv, c)),
     )
@@ -831,7 +823,7 @@ def pq_adc_dist(query_vec_col, codes_col, codebooks: list[list[list[float]]]):
     unit-tested against."""
     m = len(codebooks)
     dsub = len(codebooks[0][0])
-    cb = _books_lit(codebooks)
+    cb = V.array_lit(codebooks)
     total = None
     for mi in range(m):
         sv = F.slice(query_vec_col.cast("array<double>"), mi * dsub + 1, dsub)
@@ -859,7 +851,7 @@ def pq_adc_luts(query_vec_col, codebooks: list[list[list[float]]]):
     def _table(mi: int):
         sv = F.slice(qv, mi * dsub + 1, dsub)
         return F.transform(
-            F.lit([[float(x) for x in c] for c in codebooks[mi]]),
+            V.array_lit(codebooks[mi]),
             lambda c: _euclid2(sv, c),
         )
 
@@ -924,7 +916,7 @@ def pq_reconstruction_error(
     m = len(codebooks)
     dsub = len(codebooks[0][0])
     errs = F.zip_with(
-        _books_lit(codebooks),
+        V.array_lit(codebooks),
         _subvectors(F.col(vec_col), m, dsub),
         lambda book, sv: F.array_min(F.transform(book, lambda c: _euclid2(sv, c))),
     )
@@ -1076,7 +1068,7 @@ def ivfpq_index_build(
     ).select(
         F.col(id_col), pq_code_expr(F.col(vec_col), codebooks).alias("codes"), "cell"
     )
-    coded.write.partitionBy("cell").mode("overwrite").parquet(index_dir)
+    write_cell_layout(coded, index_dir)
 
 
 def ann_ivfpq_indexed_topk(
@@ -1100,7 +1092,7 @@ def ann_ivfpq_indexed_topk(
     ann_ivf_indexed tells for full-precision IVF."""
     from .knn import topk_per_key_agg
 
-    idx = spark.read.parquet(index_dir)
+    idx = read_cell_layout(spark, index_dir)
     probes = _probe_structs(F.col(query_vec_col), centroids)
     qcells = queries.select(
         query_id_col,
@@ -1123,6 +1115,36 @@ def ann_ivfpq_indexed_topk(
 
 # --- IVF as a materialized, partition-pruned index layout ---
 
+LAYOUT_SCHEMA_FILE = "_schema.json"
+
+
+def write_cell_layout(df: DataFrame, index_dir: str) -> None:
+    """Write ``df`` as a cell-partitioned parquet layout, then its Spark
+    schema next to the data (like VectorCollection's _manifest.json).
+    The file is written last, so its presence marks a finished build;
+    the leading underscore keeps parquet readers from listing it."""
+    df.write.partitionBy("cell").mode("overwrite").parquet(index_dir)
+    # a partitioned read lists the partition column last
+    fields = [f for f in df.schema.fields if f.name != "cell"]
+    fields += [f for f in df.schema.fields if f.name == "cell"]
+    with open(os.path.join(index_dir, LAYOUT_SCHEMA_FILE), "w") as f:
+        f.write(StructType(fields).json())
+
+
+def read_cell_layout(spark, index_dir: str) -> DataFrame:
+    """Read an IVF or IVF-PQ layout with the schema stored at build
+    time. Reading with a given schema plans without a Spark job;
+    inferring it from the parquet footers ran one on every read."""
+    path = os.path.join(index_dir, LAYOUT_SCHEMA_FILE)
+    if not os.path.isfile(path):
+        raise FileNotFoundError(
+            f"{index_dir} has no {LAYOUT_SCHEMA_FILE}: not a finished index "
+            "layout; (re)build it with ivf_index_build or ivfpq_index_build"
+        )
+    with open(path) as f:
+        schema = StructType.fromJson(json.load(f))
+    return spark.read.schema(schema).parquet(index_dir)
+
 
 def ivf_index_build(
     corpus: DataFrame,
@@ -1143,9 +1165,7 @@ def ivf_index_build(
     # maintenance log (streaming.pipeline.start_ivf_index_maintenance
     # appends micro-batches with increasing ids; reads resolve latest)
     coded = with_cell(corpus, vec_col, centroids, out_col="cell")
-    coded.withColumn("_batch", F.lit(0).cast("long")).write.partitionBy(
-        "cell"
-    ).mode("overwrite").parquet(index_dir)
+    write_cell_layout(coded.withColumn("_batch", F.lit(0).cast("long")), index_dir)
 
 
 def ann_ivf_indexed_topk(
@@ -1167,7 +1187,7 @@ def ann_ivf_indexed_topk(
     directory-level skips before any I/O."""
     from .knn import topk_per_key_agg
 
-    idx = spark.read.parquet(index_dir)
+    idx = read_cell_layout(spark, index_dir)
     probes = _probe_structs(F.col(query_vec_col), centroids)
     qcells = (
         queries.select(
@@ -1216,7 +1236,7 @@ def matryoshka_recall(
     qd = queries.select(
         query_id_col,
         query_vec_col,
-        F.explode(F.array(*[F.lit(d) for d in dims])).alias("dim"),
+        F.explode(V.array_lit(dims, integral=True)).alias("dim"),
     )
     scored = corpus.crossJoin(F.broadcast(qd)).select(
         "dim",
@@ -1249,7 +1269,7 @@ def matryoshka_recall(
 def _residual_expr(vec_col, cell_col, centroids: list[list[float]]):
     """x − centroid[cell], elementwise (zip_with; the oracle's
     list_transform(list_zip(...)) computes the identical sequence)."""
-    cent = F.element_at(_mat_lit(centroids), cell_col + 1)
+    cent = F.element_at(V.array_lit(centroids), cell_col + 1)
     return F.zip_with(vec_col.cast("array<double>"), cent, lambda x, c: x - c)
 
 
@@ -1325,7 +1345,7 @@ def sign_bit_words(vec_col, dim: int = 64, word_bits: int = 32) -> list:
     words = []
     for w in range(0, dim, word_bits):
         n = min(word_bits, dim - w)
-        weights = F.lit([1 << b for b in range(n)]).cast("array<long>")
+        weights = V.array_lit([1 << b for b in range(n)], integral=True).cast("array<long>")
         sliced = F.slice(vec_col.cast("array<double>"), w + 1, n)
         words.append(
             F.aggregate(

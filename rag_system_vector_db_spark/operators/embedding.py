@@ -193,7 +193,7 @@ def pca_project(
 
     outs = [F.col(id_col)]
     for i, comp in enumerate(components, start=1):
-        lit = F.array(*[F.lit(float(c)) for c in comp])
+        lit = V.array_lit(comp)
         # scalar offset computed the same sequential way both engines use
         off = 0.0
         for m, c in zip(mean, comp):

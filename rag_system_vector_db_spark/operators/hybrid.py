@@ -120,7 +120,7 @@ def hybrid_search_rrf(
             V.cosine(F.col(vec_col), F.col("qv")).alias("score"),
         )
     else:
-        qv = F.array(*[F.lit(float(x)) for x in query_vec])
+        qv = V.array_lit(query_vec)
         vec = vectors.select(
             F.col(vec_id_col).alias("_id"),
             V.cosine(F.col(vec_col), qv).alias("score"),

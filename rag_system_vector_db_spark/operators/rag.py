@@ -278,29 +278,40 @@ def eval_retrieval(
 ) -> DataFrame:
     """Batch eval (eval.py:58): for each query with a known expected
     id, the rank of the expected doc in top-k (null = miss) and the
-    stub grade 1/rank. One broadcast batch-kNN, no per-question loop."""
-    topk = knn.topk_batch(
-        corpus, queries.select(query_id_col, query_vec_col), k=k,
-        id_col=id_col, vec_col=vec_col,
-        query_id_col=query_id_col, query_vec_col=query_vec_col,
+    stub grade 1/rank. One broadcast batch-kNN, no per-question loop.
+
+    ``queries`` is read once: the expected id rides the broadcast query
+    side as a second key of the top-k aggregation (ranked exactly like
+    knn.topk_batch), and the hit rank is read off the top-k array. A
+    one-row marker with a null vector joins every query without being
+    ranked, so a query still gets its row (null rank, grade 0) when the
+    corpus is empty."""
+    keys = [query_id_col, expected_col]
+    cands = corpus.select(id_col, vec_col, F.lit(True).alias("_real")).unionByName(
+        corpus.sparkSession.range(0, 1, 1, 1).select(F.lit(False).alias("_real")),
+        allowMissingColumns=True,
     )
-    expected = queries.select(query_id_col, expected_col)
-    hits = topk.join(F.broadcast(expected), query_id_col).filter(
-        F.col(id_col) == F.col(expected_col)
+    scored = knn.cosine_pairs(
+        cands, queries.select(*keys, query_vec_col), vec_col, query_vec_col
     )
-    return (
-        expected.join(
-            hits.select(query_id_col, F.col("rank").alias("hit_rank")),
-            query_id_col,
-            "left",
-        )
-        .select(
-            query_id_col,
-            expected_col,
-            F.col("hit_rank").cast("long"),
-            F.round(
-                F.when(F.col("hit_rank").isNotNull(), 1.0 / F.col("hit_rank")).otherwise(0.0),
-                6,
-            ).alias("grade"),
-        )
+    # collect_list skips nulls, so the marker row adds no candidate
+    pair = F.when(
+        F.col("_real"), F.struct((-F.col("score")).alias("_o"), F.col(id_col))
+    )
+    # One aggregation. A per-partition pre-pass (knn.topk_batch) does
+    # not shrink the shuffle: partial collect_list ships every pair and
+    # the slice only runs after the exchange, so it only adds a stage.
+    top = scored.groupBy(*keys).agg(
+        F.slice(F.sort_array(F.collect_list(pair)), 1, k).alias("_top")
+    )
+    # array_position is 1-based, 0 on a miss and null for a null id
+    hit = F.nullif(
+        F.array_position(F.transform("_top", lambda s: s[id_col]), F.col(expected_col)),
+        F.lit(0),
+    )
+    return top.select(
+        query_id_col,
+        expected_col,
+        hit.cast("long").alias("hit_rank"),
+        F.round(F.when(hit.isNotNull(), 1.0 / hit).otherwise(0.0), 6).alias("grade"),
     )

@@ -222,7 +222,7 @@ def ann_ivf_indexed(spark, sf_dir):
     index_dir = _os.path.join(
         _WAREHOUSE, f"ivf_index_{_os.path.basename(sf_dir.rstrip('/'))}"
     )
-    if not _os.path.exists(_os.path.join(index_dir, "_SUCCESS")):
+    if not _os.path.exists(_os.path.join(index_dir, ann.LAYOUT_SCHEMA_FILE)):
         ann.ivf_index_build(
             load_table(spark, sf_dir, "embeddings", split=True), centroids, index_dir
         )
@@ -1877,7 +1877,7 @@ def ann_ivfpq_indexed(spark, sf_dir):
     index_dir = _os.path.join(
         _WAREHOUSE, f"ivfpq_index_{_os.path.basename(sf_dir.rstrip('/'))}"
     )
-    if not _os.path.exists(_os.path.join(index_dir, "_SUCCESS")):
+    if not _os.path.exists(_os.path.join(index_dir, ann.LAYOUT_SCHEMA_FILE)):
         ann.ivfpq_index_build(
             load_table(spark, sf_dir, "embeddings", split=True),
             centroids,

@@ -346,7 +346,9 @@ def read_ivf_index(spark: SparkSession, index_dir: str) -> DataFrame:
     readers that prune cells first instead resolve within probed cells
     only and rely on compaction to clear cross-cell staleness — the
     standard LSM trade; this view is the correctness reference."""
-    idx = spark.read.parquet(index_dir)
+    from ..operators.ann import read_cell_layout
+
+    idx = read_cell_layout(spark, index_dir)
     payload = [c for c in idx.columns if c not in ("vec_id", "_batch")]
     return (
         idx.groupBy("vec_id")
@@ -359,21 +361,21 @@ def compact_ivf_index(spark: SparkSession, index_dir: str) -> None:
     """Fold the append log down to one live row per vec_id, keeping the
     cell-partitioned layout. Crash-safe swap like
     VectorCollection.compact: write resolved tmp, rename live aside,
-    rename tmp in, drop old (object stores swap a manifest instead)."""
+    rename tmp in, drop old (object stores swap a manifest instead).
+    The compacted layout keeps its schema file."""
     import os
     import shutil
+
+    from ..operators.ann import write_cell_layout
 
     tmp = index_dir.rstrip("/") + "_compacting"
     old = index_dir.rstrip("/") + "_old"
     shutil.rmtree(tmp, ignore_errors=True)
     shutil.rmtree(old, ignore_errors=True)
     try:
-        (
-            read_ivf_index(spark, index_dir)
-            .withColumn("_batch", F.lit(0))
-            .write.partitionBy("cell")
-            .mode("overwrite")
-            .parquet(tmp)
+        write_cell_layout(
+            read_ivf_index(spark, index_dir).withColumn("_batch", F.lit(0).cast("long")),
+            tmp,
         )
         os.rename(index_dir, old)
         os.rename(tmp, index_dir)

@@ -12,6 +12,8 @@ dtypes per column, not just 9-significant-digit string equality.
 from __future__ import annotations
 
 import math
+import os
+import tempfile
 import time
 
 import duckdb
@@ -21,7 +23,9 @@ from rag_system_vector_db_spark.sources.tables import duck_parquet_path
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    # DuckDB spills to ./.tmp by default, i.e. into the checkout
+    spill = os.path.join(tempfile.gettempdir(), "duckdb_spill")
+    con = duckdb.connect(config={"temp_directory": spill})
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{duck_parquet_path(sf_dir, t)}')"

@@ -5,12 +5,16 @@ Python references (independent of both Spark and DuckDB):
 - SQ8 codes must match the clamp/floor formula and bound to ±127.
 - The sentinel-space BPE merge (string replace) must equal the greedy
   left-to-right fold reference on ANY symbol sequence.
+- vector.array_lit must give the values (bit for bit) and the Spark
+  type of the per-scalar F.lit nest it replaces.
 """
 
 from __future__ import annotations
 
 import math
+import struct
 
+import numpy as np
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -107,3 +111,77 @@ def test_bpe_string_merge_matches_replace_model(spark, symbols, pair):
     ).first()["m"]
     got = merged.strip().split(" ") if merged.strip() else []
     assert got == _bpe_replace_ref(symbols, a, b)
+
+
+EDGE = [
+    -0.0,
+    0.0,
+    5e-324,
+    -5e-324,
+    1.7976931348623157e308,
+    -1.7976931348623157e308,
+    float(np.float32(0.1)),
+    float(np.float32(-3.3e-5)),
+    float(np.float32(3.4028235e38)),
+    1e-300,
+    123456789.125,
+    math.nan,
+    math.inf,
+    -math.inf,
+]
+
+
+def _bits(v):
+    if isinstance(v, (list, tuple)):
+        return [_bits(x) for x in v]
+    return struct.pack(">d", v) if isinstance(v, float) else v
+
+
+def _same_as_lit(spark, values, integral=False):
+    from rag_system_vector_db_spark.functions import vector as V
+
+    df = spark.range(1).select(
+        F.lit(values).alias("old"), V.array_lit(values, integral=integral).alias("new")
+    )
+    old, new = df.schema["old"], df.schema["new"]
+    assert (old.dataType, old.nullable) == (new.dataType, new.nullable)
+    row = df.first()
+    assert _bits(row.old) == _bits(row.new)
+
+
+def test_array_lit_edge_values_1d_2d_3d(spark):
+    _same_as_lit(spark, EDGE)
+    _same_as_lit(spark, [EDGE, EDGE[::-1], EDGE[1:] + EDGE[:1]])
+    _same_as_lit(spark, [[EDGE, EDGE[::-1]], [EDGE[2:] + EDGE[:2], EDGE]])
+    _same_as_lit(spark, [1, -2, 3], integral=True)
+    _same_as_lit(spark, [1, 1 << 31, -(1 << 40)], integral=True)
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    st.lists(
+        st.lists(st.floats(allow_nan=True, allow_infinity=True), min_size=1, max_size=6),
+        min_size=1,
+        max_size=4,
+    ).filter(lambda m: len({len(r) for r in m}) == 1)
+)
+def test_array_lit_matches_lit_on_any_doubles(spark, mat):
+    _same_as_lit(spark, mat)
+
+
+def test_with_cell_same_cells_as_lit_centroids(spark):
+    """16x64 centroids (float32-derived, like fitted ones read back from
+    parquet) assign every vector to the same cell as the F.lit build."""
+    from rag_system_vector_db_spark.functions import vector as V
+    from rag_system_vector_db_spark.operators.ann import _argmin, with_cell
+
+    rng = np.random.default_rng(11)
+    cents = rng.standard_normal((16, 64)).astype(np.float32).astype(float).tolist()
+    vecs = rng.standard_normal((300, 64)).astype(np.float32)
+    df = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)], "vec_id long, embedding array<float>"
+    )
+    old_dists = F.transform(F.lit(cents), lambda c: V.euclidean(F.col("embedding"), c))
+    old = df.withColumn("_cd", old_dists).select("vec_id", _argmin(F.col("_cd")).alias("c"))
+    new = with_cell(df, "embedding", cents).select("vec_id", F.col("_cell").alias("c"))
+    assert sorted(old.collect()) == sorted(new.collect())

@@ -237,3 +237,59 @@ def test_residual_ivfpq_runs_and_ranks(spark, sf_dir):
         rows.sort()
         assert [r for r, _ in rows] == [1, 2, 3]
         assert all(a[1] <= b[1] for a, b in zip(rows, rows[1:]))
+
+
+def _jobs_in_group(spark, group: str, build):
+    """Spark job ids started while ``build()`` runs under ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ivf_indexed_search_plans_without_a_job(spark, sf_dir, tmp_path):
+    """The layout carries its schema, so building the probe search
+    starts no Spark job (schema inference from parquet footers ran one
+    per build), and the result still equals the in-plan IVF search."""
+    cents = ann.kmeans_fit_sample(sf_dir, k=4, n_iter=2)
+    idx_dir = str(tmp_path / "ivf_idx_jobs")
+    corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    ann.ivf_index_build(corpus, cents, idx_dir)
+    queries = corpus.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    built = {}
+    jobs = _jobs_in_group(
+        spark,
+        "ivf_indexed_build",
+        lambda: built.update(
+            df=ann.ann_ivf_indexed_topk(spark, idx_dir, queries, cents, k=3, nprobe=2)
+        ),
+    )
+    assert jobs == []
+    a = built["df"].collect()
+    b = ann.ann_ivf_topk(corpus, queries, cents, k=3, nprobe=2).collect()
+    assert sorted((r.query_id, r.rank, r.vec_id, r.score) for r in a) == sorted(
+        (r.query_id, r.rank, r.vec_id, r.score) for r in b
+    )
+
+
+def test_cell_layout_without_schema_file_is_refused(spark, sf_dir, tmp_path):
+    import os
+
+    cents = ann.kmeans_fit_sample(sf_dir, k=4, n_iter=2)
+    emb_df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    idx_dir = str(tmp_path / "ivf_idx_noschema")
+    ann.ivf_index_build(emb_df, cents, idx_dir)
+    os.remove(os.path.join(idx_dir, ann.LAYOUT_SCHEMA_FILE))
+    queries = emb_df.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    with pytest.raises(FileNotFoundError, match="ivf_index_build"):
+        ann.ann_ivf_indexed_topk(spark, idx_dir, queries, cents)
+    with pytest.raises(FileNotFoundError, match="ivf_index_build"):
+        ann.ann_ivfpq_indexed_topk(spark, idx_dir, queries, cents, [[[0.0] * 16] * 2] * 4)

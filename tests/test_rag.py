@@ -186,3 +186,59 @@ def test_evaluation_results_artifact_round_trip(spark, sf_dir, tmp_path):
     assert [tuple(r) for r in res2.orderBy("qa_id").collect()] == [
         tuple(r) for r in res.orderBy("qa_id").collect()
     ]
+
+
+def _questions(spark):
+    from rag_system_vector_db_spark.operators.embedding import embed_documents
+
+    qa = spark.createDataFrame(
+        [(0, "the river at dawn", 3), (1, "a quiet harbour town", None), (2, "letters home", 7)],
+        "query_id long, question string, expected_id long",
+    )
+    return embed_documents(qa, text_col="question", out_col="query_vec")
+
+
+def test_eval_retrieval_reads_queries_once(spark, sf_dir):
+    """The expected ids ride the broadcast query side, so the question
+    input is scanned and embedded once (a join-back read it three
+    times)."""
+    from rag_system_vector_db_spark.operators import rag
+
+    corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    ev = rag.eval_retrieval(corpus, _questions(spark), k=5)
+    plan = ev._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan ExistingRDD") == 1, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert sorted(r.query_id for r in ev.collect()) == [0, 1, 2]
+
+
+def test_eval_retrieval_empty_corpus_keeps_every_query(spark, sf_dir):
+    from rag_system_vector_db_spark.operators import rag
+
+    corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(0)
+    out = rag.eval_retrieval(corpus, _questions(spark), k=5).collect()
+    assert sorted(r.query_id for r in out) == [0, 1, 2]
+    assert all(r.hit_rank is None and r.grade == 0.0 for r in out)
+
+
+def test_eval_retrieval_null_expected_has_null_rank(spark, sf_dir):
+    """A null expected id never hits, even though every query gets a
+    full top-k; a known id that ranks gets 1/rank."""
+    from pyspark.sql import functions as F
+
+    from rag_system_vector_db_spark.operators import knn, rag
+
+    corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    q = _questions(spark)
+    top = knn.topk_batch(corpus, q.select("query_id", "query_vec"), k=5).collect()
+    second = {r.query_id: r.vec_id for r in top if r.rank == 2}
+    # expected = the rank-2 hit for query 0, null for query 1
+    q = q.withColumn(
+        "expected_id",
+        F.when(F.col("query_id") == 0, F.lit(second[0])).otherwise(
+            F.when(F.col("query_id") == 1, F.lit(None).cast("long")).otherwise(F.col("expected_id"))
+        ),
+    )
+    out = {r.query_id: r for r in rag.eval_retrieval(corpus, q, k=5).collect()}
+    assert out[0].hit_rank == 2 and out[0].grade == 0.5
+    assert out[1].expected_id is None and out[1].hit_rank is None and out[1].grade == 0.0

@@ -360,10 +360,24 @@ def test_streaming_ivf_index_maintenance_upserts(spark, tmp_path):
     assert len(got) == 20
     assert all(np.allclose(got[i], want[i]) for i in want)
 
-    # compaction: one physical row per vector, same resolved content
+    # probe results over the resolved log, to compare after compaction
+    queries = spark.createDataFrame(
+        [(i, [float(x) for x in want[i]]) for i in (0, 4, 8)],
+        "query_id long, query_vec array<double>",
+    )
+    want_hits = sorted(
+        (r.query_id, r.rank, r.vec_id, r.score)
+        for r in ann.ann_ivf_topk(P.read_ivf_index(spark, idx), queries, cents, k=3).collect()
+    )
+
+    # compaction: one physical row per vector, same resolved content,
+    # and the layout keeps its schema file (the indexed search reads it)
     P.compact_ivf_index(spark, idx)
     raw = spark.read.parquet(idx)
     assert raw.count() == 20
+    assert (tmp_path / "idx" / ann.LAYOUT_SCHEMA_FILE).is_file()
+    got_hits = ann.ann_ivf_indexed_topk(spark, idx, queries, cents, k=3).collect()
+    assert sorted((r.query_id, r.rank, r.vec_id, r.score) for r in got_hits) == want_hits
     got2 = {r.vec_id: list(r.embedding) for r in P.read_ivf_index(spark, idx).collect()}
     assert all(np.allclose(got2[i], want[i]) for i in want)
     # cells in the compacted layout are the true nearest-centroid cells
